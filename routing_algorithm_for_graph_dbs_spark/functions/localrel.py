@@ -83,9 +83,9 @@ def local_rows_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
     quirks (int-sized longs, NULL columns) land on the exact schema
     ``createDataFrame`` would produce.
     """
-    cols = [c.strip().split(None, 1) for c in _split_top(schema)]
     if not rows or len(rows) > LOCALREL_MAX_ROWS:
         return spark.createDataFrame(rows or [], schema)
+    cols = [c.strip().split(None, 1) for c in _split_top(schema)]
     try:
         values = ",".join(
             "(" + ",".join(_lit(v) for v in row) + ")" for row in rows

@@ -7,7 +7,8 @@ Parity targets:
   ``main.py:119-176``) — coordinates to coordinates with walking
   entry/exit legs and candidate stop lists.
 
-Pipeline stages (all DataFrame ops; the SSSP kernel is the only iteration):
+Pipeline stages (stages 1-2 and 4-5 run in the driver; the SSSP kernel
+is the only iteration):
 
 1. *Source candidates* — day-valid Stoptimes at the candidate stops
    departing after the query time (point variant: after time + walk from the
@@ -17,31 +18,65 @@ Pipeline stages (all DataFrame ops; the SSSP kernel is the only iteration):
    deterministic first by (departure, stoptime_id), documenting the
    reference's nondeterminism among exact ties).
 2. *Target candidates* — day-valid Stoptimes at the destination stops
-   arriving inside the time window and departing after the source departs
-   (reference ``main.py:91-94``).
+   departing inside the time window (point variant: departure + walk to
+   the end point) and after the source departs (reference
+   ``main.py:91-94``).
 3. *SSSP* — the reference loops ``gds.shortestPath.dijkstra`` per
    (source, target) pair; here ONE multi-source run seeds every candidate
    source in its own lane (identical per-lane semantics, k× less work).
 4. *Ranking* — stop variant: ``ORDER BY arrival_time, cost LIMIT 1``
    (``main.py:102``); point variant: cost augmented with entry/exit walking
-   and ``ORDER BY final_time, cost LIMIT 1`` (``main.py:157-159``).
-5. *Leg decomposition* — the winning path array exploded to consecutive
-   pairs, re-joined to Stoptime/Trip/Route/Stop for both endpoints
-   (``main.py:103-114`` / ``main.py:160-171``), producing the reference's
-   12-column leg table.
+   and ``ORDER BY final_time, cost LIMIT 1`` (``main.py:157-159``); ties
+   broken by (src, dst) stoptime id.
+5. *Leg decomposition* — consecutive stoptimes of the winning path
+   paired with their Stoptime/Trip/Route/Stop attributes (``main.py:103-114``
+   / ``main.py:160-171``), producing the reference's 12-column leg table.
+
+Where the candidates and leg attributes come from depends on the graph's
+SSSP tier (graph/sssp.py ``BROADCAST_EDGE_LIMIT``):
+
+- *Broadcast tier* (``strategy="broadcast"``, or ``"auto"`` on a graph of
+  at most ``BROADCAST_EDGE_LIMIT`` edges): from the graph's driver-resident
+  timetable index (plans/timetable_index.py, one job per graph, memoized).
+  A warm ``routing``, ``routing_between_two_points_in_space`` or
+  ``plan_trip`` then runs NO Spark job when the kernel has at most
+  ``DRIVER_LANE_LIMIT`` lanes (the in-driver Dijkstra returns a
+  LocalRelation), and one job (the Arrow Dijkstra stage) above that.
+  ``plan_trip`` reads its near-stop lists from the index too.
+- *Iterative tier*: from ONE job of DataFrame filters over the day
+  relation for the candidates and ONE enrichment job for the winner's
+  stoptimes, besides the kernel's own supersteps — those stoptimes need
+  not fit the driver.
+
+Both feed the same driver-side ranking and leg pairing, so the two paths
+return identical leg tables (tests/test_timetable_index.py).
+``routing_batch`` keeps its per-pair Window ranking and shares only the
+leg pairing.
 """
 
 from __future__ import annotations
 
-import datetime as dt
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from routing_algorithm_for_graph_dbs_spark.functions.localrel import local_rows_df
-from routing_algorithm_for_graph_dbs_spark.functions.spatial import haversine_meters
-from routing_algorithm_for_graph_dbs_spark.graph.sssp import sssp
+from routing_algorithm_for_graph_dbs_spark.functions.spatial import (
+    haversine_meters,
+    haversine_meters_scalar,
+)
+from routing_algorithm_for_graph_dbs_spark.graph.sssp import BROADCAST_EDGE_LIMIT, sssp
+from routing_algorithm_for_graph_dbs_spark.graph.stop_bound import (
+    earliest_arrival_bounds,
+    provably_unreachable,
+)
 from routing_algorithm_for_graph_dbs_spark.plans.projection import ProjectedGraph
+from routing_algorithm_for_graph_dbs_spark.plans.timetable_index import (
+    COLUMNS,
+    timetable_index,
+    walk_s,
+)
+
 
 def _none_safe(rows) -> list:
     """sorted() with NULL-tolerant keys: candidate stoptime columns are
@@ -79,73 +114,98 @@ def _pick_sources(feasible: DataFrame) -> DataFrame:
     )
 
 
-def _decompose_path(
-    winner: DataFrame, stoptimes: DataFrame, keys: tuple[str, ...] = ()
-) -> DataFrame:
-    """Stage 5: path array -> reference leg table (J6, ``main.py:103-114``).
-
-    ``winner``: row(s) with column ``path`` (array of stoptime ids).
-    ``stoptimes``: the projection's enriched day-stoptimes relation.
-    ``keys``: pass-through grouping columns (``routing_batch`` sends
-    ``pair_id`` so each OD pair's legs stay attributable).
-    """
-    # ONE streaming pass over the stoptime relation, ONE job (round 14;
-    # was two passes across three jobs): explode the path to (pos, id)
-    # elements, broadcast THEM (winner legs: tens of rows, bounded by
-    # |paths| x path length — never the stoptime relation, which at 100 TB
-    # isn't broadcastable), enrich every element in a single join, collect
-    # the handful of enriched rows, and pair consecutive positions
-    # driver-side — the reference's own client does this pairing in the
-    # driver too (main.py:103-114). The returned leg table is a JVM
-    # LocalRelation (functions/localrel.py), so downstream collects and
-    # sinks cost no further jobs. Rows, types and (keys, pos) order are
-    # identical to the former join formulation (pytest: fixture goldens +
-    # batch==sequential identity).
-    spark = winner.sparkSession
-    elems = winner.select(*keys, F.posexplode("path").alias("pos", "sid"))
-    st = stoptimes.select(
-        F.col("stoptime_id").alias("sid"),
-        "trip_id",
-        "route_id",
-        "stop_name",
-        "stop_id",
-        "stop_lat",
-        "stop_lon",
-        "departure_s",
-        "arrival_s",
+def _on_broadcast_tier(graph: ProjectedGraph, strategy: str) -> bool:
+    """True when the SSSP dispatcher runs this graph in memory."""
+    return strategy == "broadcast" or (
+        strategy == "auto" and graph.edge_count() <= BROADCAST_EDGE_LIMIT
     )
-    rows = F.broadcast(elems).join(st, "sid").collect()
 
-    by_key: dict[tuple, dict[int, object]] = {}
-    for r in rows:
-        by_key.setdefault(tuple(r[k] for k in keys), {})[r["pos"]] = r
+
+def _index_for(graph: ProjectedGraph, strategy: str):
+    """The graph's timetable index on the broadcast tier — whose day
+    stoptimes fit the driver as well as its edges — else None."""
+    return timetable_index(graph) if _on_broadcast_tier(graph, strategy) else None
+
+
+def _frame_candidates(graph, src_names, dst_names, time_s, end_s, ends=None):
+    """Stages 1-2 as DataFrame filters over the day relation (graphs past
+    the broadcast tier, whose stoptimes need not fit the driver): ONE job
+    collects both candidate lists, in the index's tuple format
+    (plans/timetable_index.py ``TimetableIndex.candidates``)."""
+    start, end, speed = ends if ends is not None else (None, None, 1.0)
+
+    def walk(point):
+        if point is None:
+            return F.lit(0)
+        return haversine_meters(
+            F.col("stop_lat"), F.col("stop_lon"), F.lit(point[0]), F.lit(point[1])
+        ) / F.lit(speed)
+
+    # NULL times can never be candidates (the index drops them too)
+    day_st = graph.stoptimes.filter(
+        F.col("departure_s").isNotNull() & F.col("arrival_s").isNotNull()
+    )
+    sources = _pick_sources(day_st.filter(
+        F.col("stop_name").isin(list(src_names))
+        & ((F.col("departure_s") - walk(start)) > F.lit(time_s))
+    ))
+    targets = day_st.filter(
+        F.col("stop_name").isin(list(dst_names))
+        & ((F.col("departure_s") + walk(end)) < F.lit(end_s))
+    )
+    cols = ["stoptime_id", "stop_id", "departure_s", "arrival_s", "stop_lat", "stop_lon"]
+    rows = (
+        sources.select(F.lit(True).alias("is_src"), *cols)
+        .unionByName(targets.select(F.lit(False).alias("is_src"), *cols))
+        .collect()
+    )
+    def cand(r, point):
+        return (r[1], r[2], r[3], r[4], walk_s(r[5], r[6], point, speed))
+
+    return (
+        [cand(r, start) for r in rows if r[0]],
+        [cand(r, end) for r in rows if not r[0]],
+    )
+
+
+def _decompose_path(
+    paths: dict, graph: ProjectedGraph, index=None, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Stage 5: winning paths -> reference leg table (J6, ``main.py:103-114``).
+
+    ``paths``: {key tuple: path (list of stoptime ids)}; ``keys``: DDL of
+    the key columns (``routing_batch`` sends ``pair_id int`` so each OD
+    pair's legs stay attributable). Consecutive path stoptimes are paired
+    in the driver — the reference's own client does this pairing too
+    (main.py:103-114). Endpoint attributes come from the timetable
+    ``index`` (no job) or, past the broadcast tier, from ONE job over the
+    day relation. The leg table is a JVM LocalRelation
+    (functions/localrel.py), so collecting it costs no further job; rows
+    are in (keys, path position) order.
+    """
+    st = graph.stoptimes
+    ids = list({sid for p in paths.values() for sid in p or ()})
+    if index is not None:
+        attrs = index.lookup(ids)
+    elif ids:
+        sel = st.filter(F.col("stoptime_id").isin(ids)).select(*COLUMNS)
+        attrs = {r[0]: tuple(r)[1:] for r in sel.collect()}
+    else:
+        attrs = {}
     leg_rows: list[tuple] = []
-    for kt in sorted(by_key):
-        seq = by_key[kt]
-        for pos in sorted(seq):
-            a, b = seq[pos], seq.get(pos + 1)
-            if b is None:
-                continue  # path end (or an id missing from the relation)
-            leg_rows.append(
-                kt
-                + (
-                    a["trip_id"],
-                    a["departure_s"],
-                    a["route_id"],
-                    a["stop_name"],
-                    a["stop_id"],
-                    [a["stop_lat"], a["stop_lon"]],
-                    b["trip_id"],
-                    b["stop_name"],
-                    b["stop_id"],
-                    [b["stop_lat"], b["stop_lon"]],
-                    b["route_id"],
-                    b["arrival_s"],
-                )
-            )
+    for kt in sorted(paths):
+        hops = [attrs.get(sid) for sid in paths[kt] or ()]
+        for a, b in zip(hops, hops[1:]):
+            if a is None or b is None:
+                continue  # an id missing from the day relation
+            # attrs: trip, route, stop_name, stop_id, lat, lon, dep, arr
+            leg_rows.append(kt + (
+                a[0], a[6], a[1], a[2], a[3], [a[4], a[5]],
+                b[0], b[2], b[3], [b[4], b[5]], b[1], b[7],
+            ))
     sch = {f.name: f.dataType.simpleString() for f in st.schema.fields}
     ddl = ", ".join(
-        [f"{k} {winner.schema[k].dataType.simpleString()}" for k in keys]
+        [*keys]
         + [
             f"trip {sch['trip_id']}",
             f"departure {sch['departure_s']}",
@@ -161,31 +221,35 @@ def _decompose_path(
             f"arrival {sch['arrival_s']}",
         ]
     )
-    return local_rows_df(spark, leg_rows, ddl)
+    if not leg_rows:
+        # an empty VALUES list cannot parse; one NULL row under LIMIT 0
+        # keeps the empty table a LocalRelation (collect: no job)
+        n_cols = len(keys) + len(LEG_COLUMNS)
+        return local_rows_df(st.sparkSession, [(None,) * n_cols], ddl).limit(0)
+    return local_rows_df(st.sparkSession, leg_rows, ddl)
 
 
 def _run_pairs(
     graph: ProjectedGraph,
-    sources: DataFrame,
-    targets: DataFrame,
+    sources: list[tuple],
+    targets: list[tuple],
     strategy: str = "auto",
-    rank_col: Column | None = None,
     max_iterations: int = 1000,
     stop_bound: bool = True,
-) -> DataFrame:
-    """Stage 3: lanes = source stoptimes; join lane results onto targets.
+) -> list[tuple]:
+    """Stage 3: lanes = source stoptimes; pair lane results with targets.
 
-    Returns per feasible (source, target): src, dst, cost, path,
-    src_departure_s, dst_arrival_s, dst_departure_s.
+    ``sources``/``targets``: candidate tuples (stoptime_id, stop_id,
+    departure_s, arrival_s, walk_s). Returns (source, target, cost, path)
+    per feasible pair: the target departs after the source departs.
 
-    ``rank_col``: the consumer's PRIMARY rank over target stoptime rows
-    (default arrival_s — routing's ORDER BY arrival, cost; the
-    two-points pipeline passes arrival + exit-walk = its final_time).
-    The kernel uses it for rank-pruned settlement: once a target settles,
-    same-group targets with a strictly larger rank can never win the
-    (rank, cost, ...) order, so the search stops at the winner's cost
-    radius instead of the farthest feasible target's (~the whole
-    duration window of day-graph).
+    The kernel settles each lane's targets by rank — arrival + exit walk,
+    the consumer's primary order (routing: ORDER BY arrival, cost; the
+    two-points pipeline: final_time): once a target settles, same-group
+    targets with a strictly larger rank can never win the (rank, cost,
+    ...) order, so the search stops at the winner's cost radius instead of
+    the farthest feasible target's (~the whole duration window of
+    day-graph).
 
     ``stop_bound``: pre-prune targets the admissible earliest-arrival
     certificate (graph/stop_bound.py) PROVES unreachable — they could
@@ -194,76 +258,34 @@ def _run_pairs(
     certificate under-prunes only; disable to A/B the exact same search
     without the certificate (tests assert winner identity both ways).
     """
-    if rank_col is None:
-        rank_col = F.col("arrival_s")
-    both = (
-        sources.select(
-            F.lit("s").alias("side"), "stoptime_id", "stop_id",
-            "departure_s", "arrival_s", F.lit(0.0).alias("rank"),
-        )
-        .unionByName(
-            targets.select(
-                F.lit("t").alias("side"), "stoptime_id", "stop_id",
-                "departure_s", "arrival_s",
-                rank_col.cast("double").alias("rank"),
-            )
-        )
-        .distinct()
-        .collect()  # ONE driver job for both candidate lists (both tiny)
-    )
-    src_rows = [r for r in both if r["side"] == "s"]
-    tgt_rows = [r for r in both if r["side"] == "t"]
     bounds = None
-    if stop_bound and src_rows:
-        from routing_algorithm_for_graph_dbs_spark.graph.stop_bound import (
-            earliest_arrival_bounds,
-            provably_unreachable,
-        )
-
-        bounds = earliest_arrival_bounds(
-            graph, [(s["stop_id"], int(s["departure_s"])) for s in src_rows]
-        )
-    else:
-        def provably_unreachable(*_a):  # noqa: E306 - bound disabled
-            return False
-
+    if stop_bound and sources:
+        bounds = earliest_arrival_bounds(graph, [(s[1], int(s[2])) for s in sources])
     # per-lane target sets, known up front (a few hundred stoptimes at the
     # destination stops): both SSSP tiers early-terminate once a lane's
     # WINNABLE targets settle. Targets departing at-or-before the lane's
-    # own departure are EXCLUDED — the ranking join discards them anyway
-    # (dst_departure > src_departure) — as are certificate-pruned ones;
-    # keeping either would block settlement forever (they are generally
-    # unreachable: time moves forward along the expanded graph), degrading
-    # early termination to full-graph convergence on the iterative tier.
-    lane_ranks = {
-        s["stoptime_id"]: [
-            (0, t["stoptime_id"], t["rank"])
-            for t in tgt_rows
-            if t["departure_s"] > s["departure_s"]
-            and not provably_unreachable(
-                bounds, s["stop_id"], int(s["departure_s"]),
-                t["stop_id"], t["arrival_s"],
-            )
+    # own departure are EXCLUDED — the pairing below discards them anyway —
+    # as are certificate-pruned ones; keeping either would block
+    # settlement forever (they are generally unreachable: time moves
+    # forward along the expanded graph), degrading early termination to
+    # full-graph convergence on the iterative tier. A lane pruned to zero
+    # targets cannot produce a result row and is not seeded at all.
+    lane_ranks = {}
+    for s in sources:
+        ts = [
+            (0, t[0], float(t[3] + t[4]))
+            for t in targets
+            if t[2] > s[2]
+            and not provably_unreachable(bounds, s[1], int(s[2]), t[1], t[3])
         ]
-        for s in src_rows
-    }
-    # a lane pruned to zero targets cannot produce a result row — drop it
-    # from the seed set entirely rather than letting it expand idly
-    lane_ranks = {lane: ts for lane, ts in lane_ranks.items() if ts}
-    spark = sources.sparkSession
-    # the lane seeds and the ranking join sides are built as JVM
-    # LocalRelations from the rows collected above (functions/localrel.py):
-    # createDataFrame would route them through a pickled Python RDD whose
-    # every materialization pays a Python-worker task (~0.3 s each on the
-    # gate box), and deriving t/s from the day relation re-ran the source
-    # window + filters inside the final job. Same rows either way — they
-    # ARE the collected candidates (guide §4: eliminate the Python
-    # boundary; §2.4: remove repeated subtrees).
-    id_t = sources.schema["stoptime_id"].dataType.simpleString()
-    dep_t = sources.schema["departure_s"].dataType.simpleString()
-    arr_t = sources.schema["arrival_s"].dataType.simpleString()
+        if ts:
+            lane_ranks[s[0]] = ts
+    if not lane_ranks:
+        return []
+    st = graph.stoptimes
+    id_t = st.schema["stoptime_id"].dataType.simpleString()
     lanes = local_rows_df(
-        spark,
+        st.sparkSession,
         [(lane, lane) for lane in sorted(lane_ranks)],
         f"lane {id_t}, node {id_t}",
     )
@@ -280,36 +302,51 @@ def _run_pairs(
         # headway bounces); resolved lazily, broadcast tier never pays
         node_parts=graph.node_parts,
     )
-    t = local_rows_df(
-        spark,
-        _none_safe(
-            {
-                (r["stoptime_id"], r["arrival_s"], r["departure_s"])
-                for r in tgt_rows
-            }
-        ),
-        f"t_id {id_t}, dst_arrival_s {arr_t}, dst_departure_s {dep_t}",
-    )
-    s = local_rows_df(
-        spark,
-        _none_safe({(r["stoptime_id"], r["departure_s"]) for r in src_rows}),
-        f"s_id {id_t}, src_departure_s {dep_t}",
-    )
-    return (
-        res.join(t, res["node"] == t["t_id"])
-        .join(s, res["lane"] == s["s_id"])
-        # pair feasibility from stage 2: target departs after source
-        .filter(F.col("dst_departure_s") > F.col("src_departure_s"))
-        .select(
-            F.col("lane").alias("src"),
-            F.col("node").alias("dst"),
-            "cost",
-            "path",
-            "src_departure_s",
-            "dst_arrival_s",
-            "dst_departure_s",
+    src_of = {s[0]: s for s in sources}
+    tgt_of = {t[0]: t for t in targets}
+    if not _on_broadcast_tier(graph, strategy):
+        # the iterative tier returns every node it reached, not only targets
+        res = res.filter(F.col("node").isin(list(tgt_of)))
+    # the in-driver tier's result is a LocalRelation (collect: no job);
+    # the Arrow tier's is its one job
+    return [
+        (src_of[r[0]], tgt_of[r[1]], r[2], r[3])
+        for r in res.collect()
+        if r[1] in tgt_of and tgt_of[r[1]][2] > src_of[r[0]][2]
+    ]
+
+
+def _route(graph, src_names, dst_names, time_s, max_duration_h, strategy,
+           max_iterations, stop_bound, ends=None) -> DataFrame:
+    """Stages 1-5 shared by both routing variants; ``ends`` = (start, end,
+    speed) of the point variant's walking legs, None stop to stop."""
+    end_s = time_s + max_duration_h * 3600
+    index = _index_for(graph, strategy)
+    if index is not None:
+        sources, targets = index.candidates(src_names, dst_names, time_s, end_s, ends)
+    else:
+        sources, targets = _frame_candidates(
+            graph, src_names, dst_names, time_s, end_s, ends
         )
-    )
+    # NO cost horizon: the reference caps only the target departure window
+    # (main.py:129-130), never path cost. CHANGE weights are waiting +
+    # walking, so a path's cost exceeds its elapsed time by the accumulated
+    # walking (minus dwell) — capping cost at the duration window would
+    # prune a reference-feasible winner whose elapsed time sits near the
+    # cap with nonzero walking. Termination comes from target settlement
+    # (both SSSP tiers early-stop once every target cost is provably final).
+    pairs = _run_pairs(graph, sources, targets, strategy, max_iterations, stop_bound)
+    # stage 4: ORDER BY final_time, cost_total, src, dst LIMIT 1 with
+    # final_time = arrival + exit walk, cost_total = cost + entry + exit
+    # walk (main.py:157-159); stop to stop both walks are 0, i.e. ORDER BY
+    # arrival_time, cost (main.py:102) with a deterministic tiebreak
+    paths = {}
+    if pairs:
+        best = min(pairs, key=lambda p: (
+            p[1][3] + p[1][4], p[2] + p[0][4] + p[1][4], p[0][0], p[1][0],
+        ))
+        paths[()] = best[3]
+    return _decompose_path(paths, graph, index)
 
 
 def routing(
@@ -326,32 +363,10 @@ def routing(
     ``main.py:73-117``). Returns the reference's 12-column leg table.
     ``strategy`` pins the SSSP tier (``auto``/``broadcast``/``iterative``)
     — used by tools/scale_validation.py for cross-tier agreement checks."""
-    day_st = graph.stoptimes
-    end_s = time_s + max_duration_h * 3600
-
-    feasible_src = day_st.filter(
-        (F.col("stop_name") == source_stop_name) & (F.col("departure_s") > time_s)
+    return _route(
+        graph, [source_stop_name], [target_stop_name], time_s,
+        max_duration_h, strategy, max_iterations, stop_bound,
     )
-    sources = _pick_sources(feasible_src)
-
-    targets = day_st.filter(
-        (F.col("stop_name") == target_stop_name) & (F.col("departure_s") < end_s)
-    )
-
-    # NO cost horizon: the reference caps only the target departure window
-    # (main.py:129-130), never path cost. CHANGE weights are waiting +
-    # walking, so a path's cost exceeds its elapsed time by the accumulated
-    # walking (minus dwell) — capping cost at the duration window would
-    # prune a reference-feasible winner whose elapsed time sits near the
-    # cap with nonzero walking. Termination comes from target settlement
-    # (both SSSP tiers early-stop once every target cost is provably final).
-    ranked = _run_pairs(
-        graph, sources, targets, strategy=strategy,
-        max_iterations=max_iterations, stop_bound=stop_bound,
-    )
-    # ORDER BY arrival_time, cost LIMIT 1 (main.py:102); deterministic tiebreak
-    winner = ranked.orderBy("dst_arrival_s", "cost", "src", "dst").limit(1)
-    return _decompose_path(winner, day_st)
 
 
 def routing_batch(
@@ -467,18 +482,9 @@ def routing_batch(
     tgt_rows = [r for r in both if r["side"] == "t"]
     bounds = None
     if stop_bound and src_rows:
-        from routing_algorithm_for_graph_dbs_spark.graph.stop_bound import (
-            earliest_arrival_bounds,
-            provably_unreachable,
-        )
-
         bounds = earliest_arrival_bounds(
             graph, [(s["stop_id"], int(s["departure_s"])) for s in src_rows]
         )
-    else:
-        def provably_unreachable(*_a):  # noqa: E306 - bound disabled
-            return False
-
     tgt_by_pair: dict[int, list] = {}
     for r in tgt_rows:
         tgt_by_pair.setdefault(r["pair_id"], []).append(
@@ -599,12 +605,13 @@ def routing_batch(
         heads = winners.select(
             "pair_id", F.col("src").alias("lane"), F.col("dst").alias("node")
         )
-        winner_paths = reconstruct_paths(res, heads, carry_cols=("pair_id",))
-        out = _decompose_path(winner_paths, day_st, keys=("pair_id",))
-        out = out.localCheckpoint(eager=True)
+        winners = reconstruct_paths(res, heads, carry_cols=("pair_id",))
+    # the leg table is built from the collected winner paths, so it holds
+    # no lineage to the kernel state released below
+    paths = {(r["pair_id"],): r["path"] for r in winners.select("pair_id", "path").collect()}
+    if pred_mode:
         res.unpersist()
-        return out
-    return _decompose_path(winners.select("pair_id", "path"), day_st, keys=("pair_id",))
+    return _decompose_path(paths, graph, _index_for(graph, strategy), keys=("pair_id int",))
 
 
 def routing_between_two_points_in_space(
@@ -622,63 +629,16 @@ def routing_between_two_points_in_space(
     stop_bound: bool = True,
 ) -> DataFrame:
     """Coordinates-to-coordinates itinerary (parity
-    ``App.routing_between_two_points_in_space``, ``main.py:119-176``)."""
-    day_st = graph.stoptimes
-    end_s = time_s + max_duration_h * 3600
-
-    start_walk = (
-        haversine_meters(F.col("stop_lat"), F.col("stop_lon"), F.lit(start_lat), F.lit(start_lon))
-        / F.lit(speed)
+    ``App.routing_between_two_points_in_space``, ``main.py:119-176``):
+    sources depart after ``time_s`` + the entry walk (main.py:132),
+    targets before the window's end - the exit walk (main.py:140), and the
+    winner ranks by arrival + exit walk, then cost + both walks
+    (main.py:157-159)."""
+    return _route(
+        graph, start_list, end_list, time_s, max_duration_h, "auto",
+        max_iterations, stop_bound,
+        ends=((start_lat, start_lon), (end_lat, end_lon), speed),
     )
-    end_walk = (
-        haversine_meters(F.col("stop_lat"), F.col("stop_lon"), F.lit(end_lat), F.lit(end_lon))
-        / F.lit(speed)
-    )
-
-    # stage 1: departure - walk_from_start > t   (main.py:132)
-    feasible_src = day_st.filter(
-        F.col("stop_name").isin(start_list)
-        & ((F.col("departure_s") - start_walk) > F.lit(time_s))
-    )
-    sources = _pick_sources(feasible_src)
-
-    # stage 2: departure + walk_to_end < endtime (main.py:140)
-    targets = day_st.filter(
-        F.col("stop_name").isin(end_list)
-        & ((F.col("departure_s") + end_walk) < F.lit(end_s))
-    )
-
-    # the consumer ranks by final_time = arrival + exit-walk (below), so
-    # that expression is the settlement rank — static per target stoptime
-    pairs = _run_pairs(
-        graph, sources, targets, rank_col=F.col("arrival_s") + end_walk,
-        max_iterations=max_iterations, stop_bound=stop_bound,
-    )
-
-    # stage 4: augment with entry/exit walking (main.py:157)
-    src_walk = day_st.select(
-        F.col("stoptime_id").alias("src"),
-        (
-            haversine_meters(F.col("stop_lat"), F.col("stop_lon"), F.lit(start_lat), F.lit(start_lon))
-            / F.lit(speed)
-        ).alias("entry_walk_s"),
-    ).distinct()
-    dst_walk = day_st.select(
-        F.col("stoptime_id").alias("dst"),
-        (
-            haversine_meters(F.col("stop_lat"), F.col("stop_lon"), F.lit(end_lat), F.lit(end_lon))
-            / F.lit(speed)
-        ).alias("exit_walk_s"),
-    ).distinct()
-
-    ranked = (
-        pairs.join(F.broadcast(src_walk), "src")
-        .join(F.broadcast(dst_walk), "dst")
-        .withColumn("cost_total", F.col("cost") + F.col("entry_walk_s") + F.col("exit_walk_s"))
-        .withColumn("final_time", F.col("dst_arrival_s") + F.col("exit_walk_s"))
-    )
-    winner = ranked.orderBy("final_time", "cost_total", "src", "dst").limit(1)
-    return _decompose_path(winner, day_st)
 
 
 def _fmt_hms(s: int | float) -> str:
@@ -708,29 +668,21 @@ def plan_trip(
     Returns {legs: DataFrame, rows, changes, start_walk_m, end_walk_m,
     totals, narrative}.
     """
-    from routing_algorithm_for_graph_dbs_spark.operators.queries import (
-        find_near_stops,
-    )
+    index = _index_for(graph, "auto")
+    if index is not None:
+        near = index.near_stops
+    else:
+        from routing_algorithm_for_graph_dbs_spark.operators.queries import (
+            find_near_stops,
+        )
 
-    start_list = [
-        r["stop_name"]
-        for r in find_near_stops(tables, graph.day, start_lat, start_lon, radius_m).collect()
-    ]
-    end_list = [
-        r["stop_name"]
-        for r in find_near_stops(tables, graph.day, end_lat, end_lon, radius_m).collect()
-    ]
+        def near(lat, lon, r):
+            return [x["stop_name"] for x in find_near_stops(tables, graph.day, lat, lon, r).collect()]
+
     legs = routing_between_two_points_in_space(
-        graph,
-        start_lat,
-        start_lon,
-        end_lat,
-        end_lon,
-        start_list,
-        end_list,
-        speed,
-        time_s,
-        max_duration_h,
+        graph, start_lat, start_lon, end_lat, end_lon,
+        near(start_lat, start_lon, radius_m), near(end_lat, end_lon, radius_m),
+        speed, time_s, max_duration_h,
     )
     rows = legs.collect()
     if not rows:
@@ -743,7 +695,7 @@ def plan_trip(
             "totals": None,
             "narrative": "No feasible itinerary in the time window.",
         }
-    changes = count_changes(legs)
+    changes = count_changes(rows)
 
     def _walk_m(stop_id: str, lat: float, lon: float, slat, slon) -> float:
         if foot_tables is not None and "foot_nodes" in foot_tables:
@@ -759,10 +711,6 @@ def plan_trip(
         # fall back to straight-line (the reference's geopy geodesic client
         # helper, main.py:320-323) — shared scalar haversine so the fallback
         # agrees with every other distance in the engine
-        from routing_algorithm_for_graph_dbs_spark.functions.spatial import (
-            haversine_meters_scalar,
-        )
-
         return haversine_meters_scalar(lat, lon, slat, slon)
 
     first, last = rows[0], rows[-1]
@@ -780,7 +728,7 @@ def plan_trip(
         last["next_stop_coordinates"][0],
         last["next_stop_coordinates"][1],
     )
-    totals = itinerary_totals(legs, start_walk_m, end_walk_m, speed)
+    totals = itinerary_totals(rows, start_walk_m, end_walk_m, speed)
 
     # show_more_details narrative (main.py:216-237): per-line boarding
     # instructions with times and stop names
@@ -810,23 +758,25 @@ def plan_trip(
     }
 
 
-def count_changes(legs: DataFrame) -> int:
-    """Number of line changes (parity: client lambda ``main.py:284-285``)."""
-    n_lines = legs.select("line").distinct().count()
-    return 0 if n_lines <= 1 else n_lines - 1
+def count_changes(legs: DataFrame | list) -> int:
+    """Number of line changes (parity: client lambda ``main.py:284-285``);
+    ``legs`` is a leg table or its collected rows."""
+    rows = legs.collect() if isinstance(legs, DataFrame) else legs
+    return max(len({r["line"] for r in rows}) - 1, 0)
 
 
 def itinerary_totals(
-    legs: DataFrame,
+    legs: DataFrame | list,
     start_walk_m: float,
     end_walk_m: float,
     speed: float,
 ) -> dict:
-    """Total trip time incl. walking (parity: client ``main.py:288-303``)."""
-    first_last = legs.agg(
-        F.min("departure").alias("dep"), F.max("arrival").alias("arr")
-    ).collect()[0]
-    transit = (first_last["arr"] or 0) - (first_last["dep"] or 0)
+    """Total trip time incl. walking (parity: client ``main.py:288-303``);
+    ``legs`` is a leg table or its collected rows."""
+    rows = legs.collect() if isinstance(legs, DataFrame) else legs
+    dep = min((r["departure"] for r in rows if r["departure"] is not None), default=0)
+    arr = max((r["arrival"] for r in rows if r["arrival"] is not None), default=0)
+    transit = arr - dep
     total = start_walk_m / speed + end_walk_m / speed + transit
     return {
         "transit_seconds": transit,

@@ -11,9 +11,11 @@ every round forever.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402
 
@@ -117,7 +119,7 @@ def test_floor_sees_r9_best_numbers_in_repo():
     BENCH_local_r09 record must be readable by the floor machinery (an
     all-rounds window, so this holds even after r9 ages out of the
     default 3-round window)."""
-    floor, src = bench._load_floor(0.1, last_n=1000, here="/root/repo")
+    floor, src = bench._load_floor(0.1, last_n=1000, here=ROOT)
     assert floor.get("routing_9od", 99.0) <= 9.961
     assert floor.get("find_near_stops_9", 99.0) <= 1.212
 
